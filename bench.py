@@ -586,19 +586,21 @@ def run_solo(name: str, n_timed: int) -> None:
     print("BENCH_SOLO " + json.dumps({name: round(best, 3)}), flush=True)
 
 
+def _run_child(args: list[str], timeout: int) -> subprocess.CompletedProcess:
+    """Run this script as a child. A child that outlives ``timeout`` is
+    killed and reported like one that printed no timings (rc None), so
+    one hung JVM cannot lose the whole run."""
+    cmd = [sys.executable, os.path.abspath(__file__), *args]
+    try:
+        return subprocess.run(cmd, capture_output=True, text=True, timeout=timeout)
+    except subprocess.TimeoutExpired:
+        return subprocess.CompletedProcess(
+            cmd, None, stdout="", stderr=f"killed after {timeout} s timeout"
+        )
+
+
 def _solo_subprocess(name: str, n_timed: int) -> float | None:
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.abspath(__file__),
-            "--solo",
-            name,
-            str(n_timed),
-        ],
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
+    proc = _run_child(["--solo", name, str(n_timed)], timeout=600)
     for line in proc.stdout.splitlines():
         if line.startswith("BENCH_SOLO "):
             return json.loads(line[len("BENCH_SOLO "):]).get(name)
@@ -620,12 +622,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     for family in FAMILIES:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--family", family],
-            capture_output=True,
-            text=True,
-            timeout=1200,
-        )
+        proc = _run_child(["--family", family], timeout=1200)
         got = False
         for line in proc.stdout.splitlines():
             if line.startswith("BENCH_FAMILY "):

@@ -57,16 +57,6 @@ def sum_money(col: Column | str, alias: str) -> Column:
     return F.sum(money(col)).cast("double").alias(alias)
 
 
-def sum_expr(expr: Column, alias: str) -> Column:
-    return F.sum(expr).cast("double").alias(alias)
-
-
-def avg_as_sum_over_count(col: Column | str, alias: str) -> Column:
-    """avg computed as exact-sum / count so both engines perform the same
-    single double division."""
-    return (F.sum(money(col)).cast("double") / F.count(F.lit(1))).alias(alias)
-
-
 def disc_price(ext: str = "l_extendedprice", disc: str = "l_discount") -> Column:
     """l_extendedprice * (1 - l_discount), all-decimal: (12,2)*(13,2) →
     exact product, no scale truncation."""

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
+
 
 def create_aggregation(
     df: DataFrame,
@@ -384,8 +386,4 @@ def frequent_item_pairs(
         F.round(support, 6).alias("support"),
         F.round(lift, 6).alias("lift"),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [all_baskets])
-    return result
+    return lifecycle.finish(result, [all_baskets], release)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.exact import round_half_up as _r6
 
 
@@ -596,11 +597,7 @@ def event_cooccurrence_lift(
             "type_a", "type_b", "n_both", F.round(lift, 6).alias("lift")
         )
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [per_user])
-    return result
+    return lifecycle.finish(result, [per_user], release)
 
 
 def user_event_novelty(df: DataFrame) -> DataFrame:
@@ -854,9 +851,7 @@ def kaplan_meier_retention(
         .otherwise(F.round(F.exp(F.col("cum_term").cast("double")), 6))
         .alias("survival"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [us])
+    return lifecycle.finish(result, [us])
 
 
 def event_transition_stats(
@@ -1025,6 +1020,4 @@ def logrank_retention(
         F.round(e1d, 6).alias("expected_a"),
         F.when(vd > 0, F.round(chi2, 6)).alias("chi2"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [us])
+    return lifecycle.finish(result, [us])

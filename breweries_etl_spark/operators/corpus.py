@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.partitioning import ensure_parallelism
 from .sampling import _BUCKETS, hash_bucket_expr
 from .text import (
@@ -305,6 +306,9 @@ def leakage_safe_split(
         df, text_col, id_col, threshold=threshold, n=n, release=False
     )
     cc = connected_components(pairs)
+    # cc is checkpointed: the shingle cache handed over with the lazy
+    # pairs is no longer read.
+    lifecycle.unpersist(pairs)
     labeled = (
         df.select(F.col(id_col))
         .join(cc.withColumnsRenamed({"doc_id": id_col}), id_col, "left")
@@ -456,11 +460,7 @@ def source_overlap_matrix(
             ).alias("jaccard"),
         )
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [sets])
-    return result
+    return lifecycle.finish(result, [sets], release)
 
 
 def curriculum_buckets(

@@ -17,12 +17,12 @@ Scale design:
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.partitioning import ensure_parallelism
 from .text import normalize_text_expr, shingle_hashes_expr, shingles_expr
 
@@ -114,31 +114,11 @@ def shingle_sets(
     if cache:
         projected = projected.persist()
     filtered = projected.filter(F.size("shingles") > 0)
-    # Handle for callers to release THE CACHED PLAN (the pre-filter
-    # projection), not the filtered view — unpersist() only drops the
-    # exact plan it was cached under.
-    filtered._shingle_cache = projected  # type: ignore[attr-defined]
+    # Hand over THE CACHED PLAN (the pre-filter projection), not the
+    # filtered view — unpersist() only drops the exact plan it was
+    # cached under.
+    filtered._caches = [projected]  # type: ignore[attr-defined]
     return filtered
-
-
-def _release_caches(result: DataFrame, caches: list[DataFrame]) -> DataFrame:
-    """Eagerly materialize ``result`` via a reliable (lineage-truncating)
-    checkpoint, then unpersist the intermediate caches it depended on.
-
-    Near-dup pipelines persist corpus-scale intermediates (shingle sets
-    are comparable in size to the raw text); returning a lazy plan that
-    still references them would pin that storage for the caller's
-    lifetime and evict everything else on a shared cluster. The pair
-    list being checkpointed is tiny next to the corpus, and the
-    recompute during the checkpoint write hits the still-warm caches.
-    """
-    sc = result.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="spark_dedup_ckpt_"))
-    out = result.checkpoint(eager=True)
-    for c in caches:
-        getattr(c, "_shingle_cache", c).unpersist()
-    return out
 
 
 def minhash_mins(
@@ -286,9 +266,7 @@ def minhash_near_duplicates(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    if release:
-        return _release_caches(result, [sh, mins])
-    return result
+    return lifecycle.finish(result, [sh, mins], release)
 
 
 def ngram_jaccard_pairs(
@@ -394,9 +372,7 @@ def ngram_jaccard_pairs(
         )
     )
     result = cross.unionByName(within)
-    if release:
-        return _release_caches(result, [sh, rep_sh, members])
-    return result
+    return lifecycle.finish(result, [sh, rep_sh, members], release)
 
 
 def prefix_filtered_jaccard_pairs(
@@ -480,9 +456,7 @@ def prefix_filtered_jaccard_pairs(
             F.round(jaccard_expr(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
         )
     )
-    if release:
-        return _release_caches(result, [sh])
-    return result
+    return lifecycle.finish(result, [sh], release)
 
 
 def prefix_jaccard_incremental(
@@ -565,9 +539,7 @@ def prefix_jaccard_incremental(
             F.round(jaccard_expr(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
         )
     )
-    if release:
-        return _release_caches(result, [sh_b, sh_i])
-    return result
+    return lifecycle.finish(result, [sh_b, sh_i], release)
 
 
 def dedup_incremental(
@@ -681,9 +653,7 @@ def simhash_near_duplicates(
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    if release:
-        return _release_caches(result, [sigs])
-    return result
+    return lifecycle.finish(result, [sigs], release)
 
 
 def edit_distance_pairs(
@@ -925,6 +895,4 @@ def containment_pairs(
         )
     )
     result = cross.unionByName(within)
-    if release:
-        return _release_caches(result, [sh, rep_sh, members])
-    return result
+    return lifecycle.finish(result, [sh, rep_sh, members], release)

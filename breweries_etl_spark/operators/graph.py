@@ -20,17 +20,10 @@ inherent to iterative algorithms, not a collect() of data.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _checkpointed(df: DataFrame) -> DataFrame:
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="spark_graph_ckpt_"))
-    return df.checkpoint(eager=True)
+from ..functions import lifecycle
 
 
 def _materialized(df: DataFrame) -> tuple[DataFrame, int]:
@@ -179,7 +172,7 @@ def _cc_loop(sc, rdds_before, edges, max_iterations: int) -> DataFrame:
         # leaf; the reliable checkpoint every CHECKPOINT_EVERY rounds
         # additionally caps recompute depth on block loss.
         if rnd % CHECKPOINT_EVERY == 0:
-            updated = _checkpointed(updated)
+            updated = lifecycle.checkpoint(updated)
         else:
             updated, _ = _truncated(updated)
             live.append(updated)
@@ -187,11 +180,10 @@ def _cc_loop(sc, rdds_before, edges, max_iterations: int) -> DataFrame:
         current = updated
         if n_changed == 0:
             break
-    result = _checkpointed(
-        current.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    result = lifecycle.finish(
+        current.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")),
+        live,
     )
-    for c in live:
-        c.unpersist()
     _release_new_rdds(sc, rdds_before)
     return result.orderBy("doc_id")
 
@@ -291,8 +283,7 @@ def _bfs_loop(sc, rdds_before, edges, sources, max_hops: int) -> DataFrame:
     # The level table is node-scale but the union drags ~32 partitions per
     # hop frame into the checkpoint — coalesce so the write is a handful
     # of files, not hops×partitions shards.
-    result = _checkpointed(out.coalesce(16))
-    edges.unpersist()
+    result = lifecycle.finish(out.coalesce(16), [edges])
     _release_new_rdds(sc, rdds_before)
     return result
 
@@ -430,10 +421,7 @@ def triangle_stats(
             ).alias("clustering"),
         )
     )
-    result = _checkpointed(out)
-    for c in (adj, oriented, deg, und):
-        c.unpersist()
-    return result
+    return lifecycle.finish(out, [adj, oriented, deg, und])
 
 
 def pagerank(
@@ -494,10 +482,9 @@ def _pagerank_loop(
     )
     nodes = nodes_deg.select("node")
     if n == 0:
-        result = _checkpointed(nodes.withColumn("rank", F.lit(0.0)))
-        edges.unpersist()
-        nodes_deg.unpersist()
-        return result
+        return lifecycle.finish(
+            nodes.withColumn("rank", F.lit(0.0)), [edges, nodes_deg]
+        )
     out_deg = nodes_deg.filter(F.col("out_deg") > 0).select(
         F.col("node").alias("src"), "out_deg"
     )
@@ -547,9 +534,7 @@ def _pagerank_loop(
             )
         )
         ranks, _ = _truncated(new_ranks, with_count=False)
-    result = _checkpointed(ranks)
-    for c in live:
-        c.unpersist()
+    result = lifecycle.finish(ranks, live)
     _release_new_rdds(sc, rdds_before)
     return result
 
@@ -671,10 +656,7 @@ def edge_embeddedness_topk(
         .orderBy(F.desc("common_neighbors"), "id_a", "id_b")
         .limit(k)
     )
-    result = _checkpointed(joined)
-    for c in (adj, oriented, deg, und):
-        c.unpersist()
-    return result
+    return lifecycle.finish(joined, [adj, oriented, deg, und])
 
 
 def kcore_summary(
@@ -809,9 +791,7 @@ def degree_assortativity(
             "assortativity"
         ),
     )
-    result = _checkpointed(out)
-    und.unpersist()
-    return result
+    return lifecycle.finish(out, [und])
 
 
 def local_clustering_summary(
@@ -871,10 +851,7 @@ def local_clustering_summary(
             ),
         ).alias("avg_clustering"),
     )
-    result = _checkpointed(out)
-    for c in (adj, oriented, deg, und):
-        c.unpersist()
-    return result
+    return lifecycle.finish(out, [adj, oriented, deg, und])
 
 
 def degree_powerlaw_alpha(
@@ -1025,11 +1002,7 @@ def partition_modularity(
             ).alias("modularity"),
         )
     )
-    if not release:
-        return out
-    from .dedup import _release_caches
-
-    return _release_caches(out, [canon])
+    return lifecycle.finish(out, [canon], release)
 
 
 def harmonic_centrality_from(
@@ -1151,9 +1124,7 @@ def rich_club_coefficients(
             ).alias("rich_club_phi"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(out, [canon])
+    return lifecycle.finish(out, [canon])
 
 
 def avg_neighbor_degree_curve(
@@ -1228,7 +1199,6 @@ def degree_centralization(
     Output one row:
     (n_nodes, n_edges, max_degree, centralization, degree_gini,
     wedge_count)."""
-    from .dedup import _release_caches
     from ..operators.hypotests import (
         dec_double_wide,
         grouped_value_prefix_counts,
@@ -1290,6 +1260,4 @@ def degree_centralization(
             "wedge_count"
         ),
     )
-    from .hypotests import _pc_caches
-
-    return _release_caches(result, _pc_caches(pc))
+    return lifecycle.finish(result, [pc])

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
+
 
 def dec_double(col: Column) -> Column:
     """Engine-portable DECIMAL→DOUBLE cast for values with more than
@@ -147,17 +149,6 @@ def _lit_long(x) -> Column:
     return F.lit(x).cast("long")
 
 
-def _pc_caches(pc) -> list:
-    """The persisted intermediates a prefix-count frame carries: the
-    value-count relation plus (r13) the bucketed shuffled relation.
-    Every release site must unpersist BOTH (zero-pinned-RDD contract)."""
-    caches = [pc._vc_cache]
-    vb = getattr(pc, "_vb_cache", None)
-    if vb is not None:
-        caches.append(vb)
-    return caches
-
-
 def grouped_value_prefix_counts(
     df: DataFrame,
     value_col: str,
@@ -170,11 +161,11 @@ def grouped_value_prefix_counts(
     cumulative counts up to and including that value — the shared
     primitive for KS / Mann-Whitney / Gini.
 
-    The returned frame carries a ``_vc_cache`` handle to the persisted
-    distinct-value relation; callers release it via
-    ``dedup._release_caches`` once their (tiny) statistic is
-    materialized. NULL values are excluded (no total order contains
-    them)."""
+    The returned frame carries its two persisted relations (the
+    distinct-value counts and the bucketed shuffle) on ``_caches``;
+    callers pass the frame as a dep to ``lifecycle.finish`` once their
+    (tiny) statistic is built. NULL values are excluded (no total order
+    contains them)."""
     vals = df.select(
         F.col(value_col).alias("v"),
         # NULL group predicate -> group B, matching every SQL twin's
@@ -235,9 +226,9 @@ def grouped_value_prefix_counts(
     # bucket-assignment subtree (profiled as two cache-scan + shuffle
     # stages per query). The cache materializes it once; cached plans
     # keep their output partitioning (canChangeCachedPlanOutputPartitioning
-    # defaults false), so both (b)-keyed consumers still skip their
-    # exchanges (guide §2.4). Released with ``_vc_cache`` via
-    # ``_vb_cache``.
+    # =false, pinned in session.py), so both (b)-keyed consumers still
+    # skip their exchanges (guide §2.4; tests/test_lifecycle.py checks
+    # the final plan). Released with vc via ``_caches``.
     vb = (
         vc.select("v", "ca", "cb", bucket_of.alias("b"))
         .repartition(F.col("b"))
@@ -266,7 +257,7 @@ def grouped_value_prefix_counts(
         (F.col("oa") + F.sum("ca").over(wv)).alias("cum_a"),
         (F.col("ob") + F.sum("cb").over(wv)).alias("cum_b"),
     )
-    out._vc_cache = vc  # type: ignore[attr-defined]
+    out._caches = [vc, vb]  # type: ignore[attr-defined]
     # Group totals as driver scalars (None on an empty relation — the
     # literal-NULL downstream matches what an aggregate over zero rows
     # produced before): closing folds inline these via F.lit instead of
@@ -276,7 +267,6 @@ def grouped_value_prefix_counts(
     out._extras = {  # type: ignore[attr-defined]
         k: row[f"__x_{k}"] for k in extra_aggs
     }
-    out._vb_cache = vb  # type: ignore[attr-defined]
     return out
 
 
@@ -303,7 +293,7 @@ def multigroup_value_prefix_counts(
     jonckheere_terpstra (k(k−1)/2 pair U-sums, one scan).
 
     NULL values/groups excluded; rows outside ``groups`` excluded.
-    Carries a ``_vc_cache`` handle like the 2-group primitive."""
+    Carries ``_caches`` like the 2-group primitive."""
     k = len(groups)
     vals = df.select(
         F.col(value_col).alias("v"), F.col(group_col).alias("__mg")
@@ -373,21 +363,12 @@ def multigroup_value_prefix_counts(
             for i in range(k)
         ],
     )
-    out._vc_cache = vc  # type: ignore[attr-defined]
+    out._caches = [vc, vb]  # type: ignore[attr-defined]
     # per-group totals as driver scalars (None over an empty relation,
     # matching an aggregate over zero rows) — see _tot_a on the 2-group
     # primitive for why.
     out._tots = [row[f"n{i}"] for i in range(k)]  # type: ignore[attr-defined]
-    out._vb_cache = vb  # type: ignore[attr-defined]
     return out
-
-
-def _released(result: DataFrame, pc: DataFrame, release: bool) -> DataFrame:
-    if not release:
-        return result
-    from .dedup import _release_caches
-
-    return _release_caches(result, _pc_caches(pc))
 
 
 def ks_test_2samp(
@@ -429,7 +410,7 @@ def ks_test_2samp(
             6,
         ).alias("ks_stat"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def mann_whitney_u(
@@ -484,7 +465,7 @@ def mann_whitney_u(
         u.alias("u_stat"),
         F.when(var > 0, F.round((u - mean) / F.sqrt(var), 6)).alias("z_score"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def global_ecdf(
@@ -521,10 +502,10 @@ def global_ecdf(
         ).otherwise(F.lit(0.0)).alias("percent_rank"),
     )
     # result is distinct-value-sized (not a scalar), but the eager
-    # checkpoint in _released is still the right trade: one narrow
+    # checkpoint in lifecycle.finish is still the right trade: one narrow
     # materialization against a warm cache, versus pinning the cache
     # for the caller's lifetime.
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def theil_index(
@@ -588,7 +569,7 @@ def theil_index(
             ).alias("theil_t"),
         )
     )
-    return _released(result, _Handle(per_key), release)
+    return lifecycle.finish(result, [per_key], release)
 
 
 def lorenz_deciles(
@@ -658,14 +639,7 @@ def lorenz_deciles(
             ),
         ).alias("cum_value_share"),
     )
-    return _released(result, pc, release)
-
-
-class _Handle:
-    """Minimal adapter so _released can unpersist a bare DataFrame."""
-
-    def __init__(self, cache: DataFrame):
-        self._vc_cache = cache
+    return lifecycle.finish(result, [pc], release)
 
 
 def quantile_normalize(
@@ -801,11 +775,7 @@ def quantile_normalize(
         F.col("k").cast("long").alias("k"),
         F.col("qv").alias("normalized"),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [gv, gb])
-    return result
+    return lifecycle.finish(result, [gv, gb], release)
 
 
 def gini_concentration(
@@ -867,7 +837,7 @@ def gini_concentration(
             ),
         ).alias("hhi"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def value_prefix_counts(
@@ -879,16 +849,15 @@ def value_prefix_counts(
     ranks derive in closed integer form: the tied block for value v
     occupies positions cum−c+1 … cum, so twice its average rank is
     2·cum − c + 1 (an INTEGER — no .5 floats anywhere near the
-    arithmetic). Carries the same ``_vc_cache`` handle contract."""
+    arithmetic). Carries the same ``_caches`` handover."""
     pc = grouped_value_prefix_counts(
         df, value_col, F.lit(False), extra_aggs=extra_aggs
     )
     out = pc.select(
         "v", F.col("cb").alias("c"), F.col("cum_b").alias("cum")
     )
-    out._vc_cache = pc._vc_cache  # type: ignore[attr-defined]
+    out._caches = pc._caches  # type: ignore[attr-defined]
     out._extras = pc._extras  # type: ignore[attr-defined]
-    out._vb_cache = pc._vb_cache  # type: ignore[attr-defined]
     # population total as a driver scalar (group A is empty, so all
     # mass is in _tot_b) — callers inline it; see _lit_long.
     out._tot = pc._tot_b  # type: ignore[attr-defined]
@@ -953,13 +922,7 @@ def spearman_rho(
             "rho"
         ),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(
-            result, _pc_caches(px) + _pc_caches(py)
-        )
-    return result
+    return lifecycle.finish(result, [px, py], release)
 
 
 def kruskal_wallis(
@@ -1048,7 +1011,7 @@ def kruskal_wallis(
         F.round(h, 6).alias("h"),
         F.when(corr > 0, F.round(h / corr, 6)).alias("h_tie_corrected"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def anova_oneway(
@@ -1282,9 +1245,7 @@ def cramers_v(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
             ),
         ).alias("cramers_v"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [cells])
+    return lifecycle.finish(result, [cells])
 
 
 def partial_corr(
@@ -1572,9 +1533,7 @@ def js_divergence_split(
         F.col("n_labels").cast("long").alias("n_labels"),
         F.round(F.col("t").cast("double") / 2.0, 6).alias("js_divergence"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [per_label])
+    return lifecycle.finish(result, [per_label])
 
 
 def roc_auc(
@@ -1621,7 +1580,7 @@ def roc_auc(
         F.when(ok, F.round(auc, 6)).alias("auc"),
         F.when(ok, F.round(auc * 2.0 - 1.0, 6)).alias("gini_coef"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def score_decile_lift(
@@ -1692,7 +1651,7 @@ def score_decile_lift(
             ),
         ).alias("cum_gain"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def mcnemar_test(
@@ -2065,9 +2024,7 @@ def kendall_tau_b(
             F.round((dec_double_wide(nc) - dec_double_wide(nd)) / den, 6),
         ).alias("tau_b"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [cells]) if release else result
+    return lifecycle.finish(result, [cells], release)
 
 
 def cochran_q(
@@ -2213,7 +2170,7 @@ def moods_median_test(
             F.round(F.col("chi_fp").cast("double") / F.lit(1e6), 4),
         ).alias("chi2"),
     )
-    return _released(result, pc, True)
+    return lifecycle.finish(result, [pc])
 
 
 def cvm_test_2samp(
@@ -2265,7 +2222,7 @@ def cvm_test_2samp(
             6,
         ).alias("cvm_t"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def anderson_darling_2samp(
@@ -2315,7 +2272,7 @@ def anderson_darling_2samp(
             na / nb * (dec_double_wide(F.col("a_fp")) / F.lit(1e9)), 6
         ).alias("ad_stat"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def cliffs_delta(
@@ -2366,7 +2323,7 @@ def cliffs_delta(
             ),
         ).alias("cliffs_delta"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def wilcoxon_signed_rank(
@@ -2417,7 +2374,7 @@ def wilcoxon_signed_rank(
             "z_score"
         ),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def odds_ratio_2x2(df: DataFrame, flag_a: Column, flag_b: Column) -> DataFrame:
@@ -2974,9 +2931,7 @@ def quade_test(
         .cast("long")
         .alias("df2"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [complete])
+    return lifecycle.finish(result, [complete])
 
 
 def ansari_bradley(
@@ -3075,7 +3030,7 @@ def ansari_bradley(
         F.round(w, 6).alias("ab_stat"),
         F.when(ok, F.round((w - mean) / F.sqrt(var), 6)).alias("z_score"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def pr_curve_points(
@@ -3149,7 +3104,7 @@ def pr_curve_points(
             F.round(2.0 * prec * rec / (prec + rec), 6),
         ).alias("f1"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def brier_decomposition(
@@ -3292,7 +3247,7 @@ def average_precision(
             ),
         ).alias("average_precision"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def g_test_contingency(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
@@ -3348,9 +3303,7 @@ def g_test_contingency(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
             F.round(dec_double_wide(F.col("g_fp")) / F.lit(1e6), 4),
         ).alias("g_stat"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [cells])
+    return lifecycle.finish(result, [cells])
 
 
 def ordinal_association(
@@ -3425,9 +3378,7 @@ def ordinal_association(
             den_xy > 0, F.round(F.lit(2.0) * (ncd - ndd) / den_xy, 6)
         ).alias("somers_dxy"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [cells]) if release else result
+    return lifecycle.finish(result, [cells], release)
 
 
 def yuen_trimmed_t(
@@ -3537,7 +3488,7 @@ def yuen_trimmed_t(
         F.when(ok, F.round(t, 6)).alias("yuen_t"),
         F.when(ok, F.round(dof, 6)).alias("df"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def kuiper_test_2samp(
@@ -3584,7 +3535,7 @@ def kuiper_test_2samp(
         F.round(dm, 6).alias("d_minus"),
         F.round(dp + dm, 6).alias("kuiper_v"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def jonckheere_terpstra(
@@ -3621,7 +3572,6 @@ def jonckheere_terpstra(
     mg = multigroup_value_prefix_counts(
         df, value_col, group_col, list(ordered_groups), n_buckets
     )
-    handles = _pc_caches(mg)
     # A = low group i, B = high group j: 2U_ij = 2·Σ c_j·(#A below)
     # + Σ c_i·c_j; one sum column per ordered pair, all in one agg
     pair_terms = []
@@ -3648,7 +3598,7 @@ def jonckheere_terpstra(
     # k/Σn² — filter like the former groupBy relation did implicitly
     stack_args = ", ".join(f"n{i}" for i in range(k))
     sizes = (
-        mg._vc_cache.agg(  # type: ignore[attr-defined]
+        mg._caches[0].agg(  # type: ignore[attr-defined]
             *[F.sum(f"c{i}").alias(f"n{i}") for i in range(k)]
         )
         .select(F.expr(f"stack({k}, {stack_args}) as (n_g)"))
@@ -3681,11 +3631,7 @@ def jonckheere_terpstra(
             "z_score"
         ),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, handles)
-    return result
+    return lifecycle.finish(result, [mg], release)
 
 
 def dunn_pairwise_z(
@@ -3707,11 +3653,11 @@ def dunn_pairwise_z(
     labels: (group_a, group_b, n_a, n_b, mean_rank_a, mean_rank_b,
     z_score). ``release=True`` (default) checkpoints the result and
     frees the internal caches; with ``release=False`` the caches are
-    handed to the caller on ``result._dunn_caches`` for explicit
-    unpersist. CAVEAT (ADVICE r11): ``_dunn_caches`` is a plain Python
+    handed to the caller on ``result._caches`` for explicit
+    unpersist. CAVEAT (ADVICE r11): ``_caches`` is a plain Python
     attribute on THIS DataFrame object — any further transformation
     (``.select``/``.filter``/…) returns a NEW object without it, so
-    capture ``caches = result._dunn_caches`` IMMEDIATELY, before
+    capture ``caches = result._caches`` IMMEDIATELY, before
     wrapping the result, or the persisted intermediates leak for the
     session lifetime."""
     d38 = "decimal(38,0)"
@@ -3800,20 +3746,7 @@ def dunn_pairwise_z(
         F.round(rb, 6).alias("mean_rank_b"),
         F.when(se > 0, F.round((ra - rb) / se, 6)).alias("z_score"),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(
-            result, _pc_caches(pc) + [per_g]
-        )
-    # release=False contract: the CALLER owns the two persisted
-    # intermediates (the prefix-count relation and the k-row per-group
-    # relation) and must unpersist them once the plan is consumed —
-    # they are handed over on the result as ``_dunn_caches`` so the
-    # per_g cache can't silently pin storage for the session lifetime
-    # (ADVICE r10 low).
-    result._dunn_caches = _pc_caches(pc) + [per_g]  # type: ignore[attr-defined]
-    return result
+    return lifecycle.finish(result, [pc, per_g], release)
 
 
 def lin_ccc(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
@@ -4077,7 +4010,7 @@ def hellinger_bhattacharyya(
     ).select(
         lit_na.alias("n_a"), lit_nb.alias("n_b"), "n_bins_used", "bc"
     )
-    folded = _released(folded, pc, True)
+    folded = lifecycle.finish(folded, [pc])
     bc = F.col("bc").cast("double")
     ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
     return folded.select(
@@ -4170,9 +4103,7 @@ def group_deviance(
             F.round(F.lit(2.0) * dec_double_wide_frac(F.col("dg")) / n, 6),
         ).alias("gamma_deviance"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [per_g])
+    return lifecycle.finish(result, [per_g])
 
 
 def mantel_haenszel_or(
@@ -4398,9 +4329,7 @@ def robust_shape_profile(df: DataFrame, value_col: str) -> DataFrame:
             for k in range(1, 8)
         ],
     ).withColumn("n", lit_n)
-    from .dedup import _release_caches
-
-    agg = _release_caches(agg, _pc_caches(pc))
+    agg = lifecycle.finish(agg, [pc])
     e = lambda i: F.col(f"__e{i}").cast("double")  # noqa: E731
     q1, q2, q3 = e(2), e(4), e(6)
     iqr = q3 - q1
@@ -4644,7 +4573,6 @@ def ad_ksample(
     mg = multigroup_value_prefix_counts(
         df, value_col, group_col, groups, n_buckets
     )
-    handles = _pc_caches(mg)
     lsum = None
     for i in range(k):
         lsum = F.col(f"c{i}") if lsum is None else lsum + F.col(f"c{i}")
@@ -4726,11 +4654,7 @@ def ad_ksample(
     else:
         result = _adk_standardize(df.sparkSession, nn_v, folded, base_cols,
                                   n_buckets)
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, handles)
-    return result
+    return lifecycle.finish(result, [mg], release)
 
 
 def _adk_standardize(
@@ -5061,7 +4985,7 @@ def wasserstein_1(
             ),
         ).alias("wasserstein_1"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def energy_distance(
@@ -5237,7 +5161,7 @@ def qq_fit(
             F.round(sxy_c * sxy_c / (sxx_c * syy_c), 6),
         ).alias("r2"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def brunner_munzel(
@@ -5317,7 +5241,7 @@ def brunner_munzel(
             F.round(na * nb * (r_cb - r_ca) / (nn * F.sqrt(var)), 6),
         ).alias("bm_stat"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def theil_l_atkinson(
@@ -5515,11 +5439,7 @@ def hoeffding_d(
             F.round(F.lit(30.0) * F.col("dsum").cast("double"), 6),
         ).alias("hoeffding_d"),
     )
-    from .dedup import _release_caches
-
-    if release:
-        return _release_caches(result, [cells])
-    return result
+    return lifecycle.finish(result, [cells], release)
 
 
 def breslow_day(
@@ -5645,9 +5565,7 @@ def breslow_day(
             F.round(F.col("chi2").cast("double"), 6),
         ).alias("bd_chi2"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [per_k])
+    return lifecycle.finish(result, [per_k])
 
 
 def cuzick_trend(
@@ -5680,7 +5598,6 @@ def cuzick_trend(
     mg = multigroup_value_prefix_counts(
         df, value_col, group_col, groups, n_buckets
     )
-    handles = _pc_caches(mg)
     lsum = None
     for i in range(k):
         lsum = F.col(f"c{i}") if lsum is None else lsum + F.col(f"c{i}")
@@ -5741,11 +5658,7 @@ def cuzick_trend(
             F.round((t_stat - e_t) / F.sqrt(var_t), 6),
         ).alias("z_score"),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, handles)
-    return result
+    return lifecycle.finish(result, [mg], release)
 
 
 def gk_lambda(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
@@ -5860,7 +5773,7 @@ def youden_j(
     nn = F.col("n_neg").cast("double")
     tpr = (np_ - F.col("best.cum_a").cast("double")) / np_
     fpr = (nn - F.col("best.cum_b").cast("double")) / nn
-    return _released(
+    return lifecycle.finish(
         folded.select(
             F.col("n_pos").cast("long").alias("n_pos"),
             F.col("n_neg").cast("long").alias("n_neg"),
@@ -5874,7 +5787,7 @@ def youden_j(
                 ),
             ).alias("youden_j"),
         ),
-        pc,
+        [pc],
         release,
     )
 
@@ -5990,7 +5903,7 @@ def bws_test(
         / F.lit(1e9)
         / F.col("fold_n_cb").cast("double")
     )
-    return _released(
+    return lifecycle.finish(
         j.select(
             F.col("fold_n_ca").cast("long").alias("n_a"),
             F.col("fold_n_cb").cast("long").alias("n_b"),
@@ -5998,7 +5911,7 @@ def bws_test(
             F.round(b_b, 6).alias("b_b"),
             F.round((b_a + b_b) / F.lit(2.0), 6).alias("bws_b"),
         ),
-        pc,
+        [pc],
         release,
     )
 
@@ -6180,7 +6093,7 @@ def mood_dispersion(
             F.round((t_stat - e_t) / F.sqrt(var_t), 6),
         ).alias("z_score"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def welch_anova(
@@ -6366,7 +6279,6 @@ def van_der_waerden(
     mg = multigroup_value_prefix_counts(
         df, value_col, group_col, groups, n_buckets
     )
-    handles = _pc_caches(mg)
     lsum = None
     msum = None
     for i in range(k):
@@ -6430,11 +6342,7 @@ def van_der_waerden(
             "t_stat"
         ),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, handles)
-    return result
+    return lifecycle.finish(result, [mg], release)
 
 
 def fligner_killeen(
@@ -6465,7 +6373,6 @@ def fligner_killeen(
     mg1 = multigroup_value_prefix_counts(
         df, value_col, group_col, groups, n_buckets
     )
-    handles = _pc_caches(mg1)
     # group totals inlined as literals from the primitive's one collect
     # (r13) — no totals broadcast-subquery job + BNLJ per pass; see
     # ks_test_2samp.
@@ -6503,7 +6410,6 @@ def fligner_killeen(
     mg2 = multigroup_value_prefix_counts(
         centered, "__fk_z", "__fk_g", groups, n_buckets
     )
-    handles.extend(_pc_caches(mg2))
     lsum = None
     msum = None
     for i in range(k):
@@ -6575,11 +6481,7 @@ def fligner_killeen(
             "x2_stat"
         ),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, handles)
-    return result
+    return lifecycle.finish(result, [mg1, mg2], release)
 
 
 # Abramowitz & Stegun 7.1.26 erf polynomial — public rational
@@ -6690,7 +6592,7 @@ def cucconi_test(
             F.round(c_stat, 6),
         ).alias("cucconi_c"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def lepage_test(
@@ -6804,7 +6706,7 @@ def lepage_test(
         F.when(ok, ll).alias("lepage_l"),
         F.when(ok, F.round(F.exp(-ll / F.lit(2.0)), 6)).alias("p_value"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def dagostino_k2(df: DataFrame, value_col: str) -> DataFrame:
@@ -7072,7 +6974,7 @@ def siegel_tukey(
         F.round(w, 6).alias("st_stat"),
         F.when(ok, F.round((w - mean) / F.sqrt(var), 6)).alias("z_score"),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def conover_squared_ranks(
@@ -7184,7 +7086,7 @@ def conover_squared_ranks(
             "z_score"
         ),
     )
-    return _released(result, pc, release)
+    return lifecycle.finish(result, [pc], release)
 
 
 def friedman_aligned_ranks(
@@ -7319,8 +7221,4 @@ def friedman_aligned_ranks(
         .cast("long")
         .alias("df"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(
-        result, [aligned] + _pc_caches(pc)
-    )
+    return lifecycle.finish(result, [aligned, pc])

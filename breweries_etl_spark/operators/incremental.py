@@ -25,24 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def aggregate_delta(
-    delta: DataFrame, keys: list[str], measures: dict[str, str]
-) -> DataFrame:
-    """Aggregate an incoming delta down to merge-ready partial state.
-
-    ``measures`` maps output column -> one of 'count' | 'sum:<col>' |
-    'min:<col>' | 'max:<col>'.
-    """
-    aggs = []
-    for out, spec in measures.items():
-        if spec == "count":
-            aggs.append(F.count(F.lit(1)).alias(out))
-        else:
-            op, _, col = spec.partition(":")
-            aggs.append(getattr(F, op)(F.col(col)).alias(out))
-    return delta.groupBy(*keys).agg(*aggs)
-
-
 def merge_aggregate_state(
     base: DataFrame,
     delta_state: DataFrame,

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.partitioning import ensure_parallelism
 
 MICRO = 1_000_000
@@ -752,7 +753,6 @@ def boosted_stumps_2(
     prefix sums, so nothing order-dependent survives. Output one row:
     (n, sse_base, split_1, pred_left_1, pred_right_1, sse_1,
     split_2, adj_left_2, adj_right_2, sse_2)."""
-    from .dedup import _release_caches
     from breweries_etl_spark.operators.hypotests import (
         dec_double_wide_frac,
         quantized_money,
@@ -876,4 +876,4 @@ def boosted_stumps_2(
         F.round(F.col("b.ar"), 6).alias("adj_right_2"),
         F.col("b.sse").alias("sse_2"),
     )
-    return _release_caches(result, [per_x]) if release else result
+    return lifecycle.finish(result, [per_x], release)

@@ -13,6 +13,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import lifecycle
+
 _NUMERIC = (T.IntegerType, T.LongType, T.ShortType, T.DoubleType, T.FloatType, T.DecimalType)
 
 
@@ -464,11 +466,7 @@ def robust_scale_stats(
             ).alias("n_outliers"),
         )
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [med])
-    return result
+    return lifecycle.finish(result, [med], release)
 
 
 def distribution_shift(
@@ -806,11 +804,7 @@ def cohens_kappa(
         F.round(pe, 6).alias("pe"),
         F.when(pe < 1.0, F.round((po - pe) / (F.lit(1.0) - pe), 6)).alias("kappa"),
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [cells])
-    return result
+    return lifecycle.finish(result, [cells], release)
 
 
 def chi2_drift(
@@ -1114,7 +1108,6 @@ def concentration_ratios(
     TakeOrderedAndProject over (total desc, key) — deterministic ties,
     no global sort materialized; the grand total folds separately.
     Output one row per k: (k, n_keys, total_value, top_share)."""
-    from .dedup import _release_caches
     from .hypotests import dec_double_wide_frac, quantized_money
 
     per_key = (
@@ -1163,7 +1156,7 @@ def concentration_ratios(
             ),
         ).alias("top_share"),
     )
-    return _release_caches(result, [per_key])
+    return lifecycle.finish(result, [per_key])
 
 
 def hill_tail_index(
@@ -1212,8 +1205,6 @@ def hill_tail_index(
             ).alias("ls")
         )
     )
-    from .dedup import _release_caches
-
     ls = F.col("ls").cast("double")
     result = (
         lsum.crossJoin(F.broadcast(nn))
@@ -1227,7 +1218,7 @@ def hill_tail_index(
             ),
         )
     )
-    return _release_caches(result, [top])
+    return lifecycle.finish(result, [top])
 
 
 def ranking_stability(
@@ -1421,11 +1412,7 @@ def mcc_multiclass(
             F.round((c * s - tp) / denom, 6),
         ).alias("mcc"),
     )
-    from .dedup import _release_caches
-
-    if release:
-        return _release_caches(result, [cells])
-    return result
+    return lifecycle.finish(result, [cells], release)
 
 
 def kendalls_w(df: DataFrame, key_col: str, metrics: list) -> DataFrame:
@@ -1567,7 +1554,7 @@ def rank_biased_overlap(
         .agg(F.sum("w").alias("wsum"))
     )
     nm = matched.agg(F.count(F.lit(1)).alias("n_matched"))
-    return folded.crossJoin(F.broadcast(nm)).select(
+    result = folded.crossJoin(F.broadcast(nm)).select(
         F.lit(k).cast("long").alias("k"),
         F.col("n_matched").cast("long").alias("n_matched"),
         F.round(
@@ -1576,6 +1563,7 @@ def rank_biased_overlap(
             6,
         ).alias("rbo"),
     )
+    return lifecycle.finish(result, [per_key])
 
 
 def covariate_balance(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.partitioning import ensure_parallelism
 
 # 4 hex chars = 65536 buckets → fraction granularity ~0.0015%
@@ -310,7 +311,6 @@ def neyman_allocation(
     allocation rounds DOWN — the unallocated remainder is reported via
     the share column rather than redistributed, a closed form). Output
     per stratum: (stratum, n_rows, sd, share, alloc_n)."""
-    from .dedup import _release_caches
     from .hypotests import dec_double_wide_frac, quantized_money
 
     per_h = (
@@ -358,7 +358,7 @@ def neyman_allocation(
             F.floor(share * F.lit(float(total_n))).cast("long"),
         ).alias("alloc_n"),
     )
-    return _release_caches(result, [scored])
+    return lifecycle.finish(result, [scored])
 
 
 def capture_recapture_distinct(

@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.exact import round_half_up as _r6
 
 from ..functions.partitioning import ensure_parallelism
@@ -321,11 +322,12 @@ def ivf_topk(
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
+    result = (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "corpus_id", "cosine", "rank")
     )
+    return lifecycle.finish(result, [assigned])
 
 
 def build_ivf_index(

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
+
 
 def heavy_keys(
     fact: DataFrame, key: str, heat_factor: float = 4.0
@@ -40,9 +42,9 @@ def heavy_keys(
     # to disk via the default MEMORY_AND_DISK level if the key domain
     # outgrows executor storage. The cache cannot be eagerly released
     # here (the joined result is corpus-scale, so a checkpoint-release
-    # is not an option) — instead the handle rides on the returned
-    # frame as ``_heavy_cache`` (and on through ``salted_join``), so a
-    # long-lived caller can ``df._heavy_cache.unpersist()``
+    # is not an option) — instead it is handed over on the returned
+    # frame's ``_caches`` (and on through ``salted_join``), so a
+    # long-lived caller can ``lifecycle.unpersist(df)``
     # deterministically once the join has materialized, instead of
     # reaching for session-wide clearCache (ADVICE r5).
     counts = fact.groupBy(key).agg(F.count(F.lit(1)).alias("__cnt")).persist()
@@ -59,8 +61,7 @@ def heavy_keys(
         )
         .select(key)
     )
-    heavy._heavy_cache = counts  # type: ignore[attr-defined]
-    return heavy
+    return lifecycle.finish(heavy, [counts], release=False)
 
 
 def salted_join(
@@ -132,7 +133,6 @@ def salted_join(
         (f[fact_key] == d[dim_key]) & (f["__salt"] == d["__salt"]),
     )
     out = joined.drop(d["__salt"]).drop(f["__salt"])
-    # Propagate the heavy-key cache handle so callers can unpersist
+    # Propagate the heavy-key cache handover so callers can unpersist
     # deterministically after materializing the join (ADVICE r5).
-    out._heavy_cache = heavy_raw._heavy_cache  # type: ignore[attr-defined]
-    return out
+    return lifecycle.finish(out, [heavy_raw], release=False)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..functions.exact import money
 
 # Summed daily totals re-narrow from Spark's sum-widened (28,2) to the
@@ -969,9 +970,7 @@ def acf_daily(
         )
         .orderBy("lag")
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def theil_sen_daily_trend(
@@ -1041,9 +1040,7 @@ def theil_sen_daily_trend(
             F.round(F.col("intercept"), 4).alias("intercept"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def mann_kendall_daily(
@@ -1108,9 +1105,7 @@ def mann_kendall_daily(
             F.when(var_s > 0, F.round(z, 6)).alias("z"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def _daily_series(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
@@ -1213,9 +1208,7 @@ def durbin_watson_daily(
             (F.col("den_fp") > 0) & (F.col("n_days") > 2), F.round(dw, 6)
         ).alias("dw_stat"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def runs_test_daily(
@@ -1377,9 +1370,7 @@ def cusum_change_point(
             4,
         ).alias("cusum_max"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def ljung_box_daily(
@@ -1400,7 +1391,6 @@ def ljung_box_daily(
     so the final Σ is associative (a plain double SUM over even 7 rows
     is order-dependent in the last ulp). Output one row:
     (n_days, max_lag, lb_stat)."""
-    from .dedup import _release_caches
     from .hypotests import dec_double
 
     daily = _daily_series(df, ts_col, value_col).persist()
@@ -1452,7 +1442,7 @@ def ljung_box_daily(
             ),
         ).alias("lb_stat"),
     )
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def seasonal_decompose_weekday(
@@ -1558,9 +1548,7 @@ def seasonal_decompose_weekday(
         ).alias("seasonal_strength")
     )
     result = effects.crossJoin(F.broadcast(strength))
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def lagged_xcorr_daily(
@@ -1617,9 +1605,7 @@ def lagged_xcorr_daily(
             (vy > 0) & (vc > 0), F.round(cov / F.sqrt(vy * vc), 6)
         ).alias("xcorr"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def changepoint_binseg_daily(
@@ -1690,9 +1676,7 @@ def changepoint_binseg_daily(
             F.floor((sst - sse_best) * F.lit(100.0)) / F.lit(100.0)
         ).alias("gain"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def theil_u_daily(
@@ -1738,9 +1722,7 @@ def theil_u_daily(
             rms_y + rms_p > 0, F.round(rmse / (rms_y + rms_p), 6)
         ).alias("theil_u"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def cox_stuart_trend_daily(
@@ -1882,9 +1864,7 @@ def seasonal_periodogram_daily(
             den > 0, F.round(F.lit(2.0) * (a * a + b * b) / (n * den), 6)
         ).alias("power_fraction"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def interarrival_burstiness(
@@ -2080,9 +2060,7 @@ def hurst_rs_daily(
         F.when(ok, F.round(sxy_c / sxx_c, 6)).alias("hurst_h"),
         F.when(ok, F.round(sxy_c * sxy_c / (sxx_c * syy_c), 6)).alias("r2"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def type_mix_entropy_trend(
@@ -2275,9 +2253,7 @@ def mase_daily(
             ).alias("mase"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def turning_points_daily(
@@ -2409,9 +2385,7 @@ def sample_entropy_daily(
             ),
         ).alias("sampen"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def spectral_entropy_daily(
@@ -2549,9 +2523,7 @@ def spectral_entropy_daily(
             ).alias("spectral_entropy"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def dispersion_daily_counts(
@@ -2910,9 +2882,7 @@ def pacf_daily(
         F.round(F.col("p22"), 6).alias("pacf2"),
         F.round(p33, 6).alias("pacf3"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def seasonal_strength_daily(
@@ -2936,7 +2906,6 @@ def seasonal_strength_daily(
     both variances fold as floor(·10⁶) fixed point, so both engines
     agree bit-exactly. Output one row:
     (n_days, var_detrended, var_residual, seasonal_strength)."""
-    from .dedup import _release_caches
     from .hypotests import dec_double_wide
 
     half = (period - 1) // 2
@@ -2997,7 +2966,7 @@ def seasonal_strength_daily(
         F.when((F.col("n") > 0) & (var_d > 0), F.round(strength, 6))
         .alias("seasonal_strength"),
     )
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def bh_fdr_daily_counts(
@@ -3272,9 +3241,7 @@ def seasonal_mann_kendall(
             ).alias("z_score"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def chatterjee_xi_daily(
@@ -3438,9 +3405,7 @@ def pettitt_changepoint(
         F.col("change_day").cast("long").alias("change_day"),
         F.when(F.col("n") > 1, F.round(p, 6)).alias("p_approx"),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def foster_stuart_records(
@@ -3510,9 +3475,7 @@ def foster_stuart_records(
             "z_disp"
         ),
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def permutation_entropy_daily(
@@ -3614,7 +3577,6 @@ def variance_ratio_daily(
             (F.col("y") - F.col("y1")).cast("decimal(38,2)")
         ).alias("sr"),
     )
-    from .dedup import _release_caches
     from .hypotests import dec_double_wide_frac
 
     j = lagged.crossJoin(F.broadcast(tot))
@@ -3657,7 +3619,7 @@ def variance_ratio_daily(
         F.when(ok, F.round(vr, 6)).alias("vr_stat"),
         F.when(ok, F.round((vr - F.lit(1.0)) / se, 6)).alias("z_score"),
     )
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def buishand_range_daily(
@@ -3675,7 +3637,6 @@ def buishand_range_daily(
     accumulation to diverge. One fact shuffle to the day relation; one
     cumulative window over it. Output one row:
     (n_days, q_stat, r_stat, q_scaled, r_scaled)."""
-    from .dedup import _release_caches
     from .hypotests import dec_double_wide_frac
 
     daily = _daily_series(df, ts_col, value_col).persist()
@@ -3721,7 +3682,7 @@ def buishand_range_daily(
         ),
         F.when(ok, F.round(rng / scale, 6)).alias("r_scaled"),
     )
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def snht_daily_value(
@@ -3746,7 +3707,6 @@ def snht_daily_value(
     exact integers. One fact shuffle to the bounded day relation; one
     cumulative window; 1-row output guarantee on empty/degenerate
     input. Output: (n_days, t_stat, change_day)."""
-    from .dedup import _release_caches
     from ..operators.hypotests import dec_double_wide
 
     daily = _daily_series(df, ts_col, value_col).persist()
@@ -3818,7 +3778,7 @@ def snht_daily_value(
             "change_day"
         ),
     )
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])
 
 
 def distance_correlation_daily(
@@ -3857,7 +3817,6 @@ def distance_correlation_daily(
     with long-span, large-magnitude data should pre-scale value_col by
     a constant (dCor is scale-invariant; truncation error then lands
     in the input quantization, not mid-fold overflow)."""
-    from .dedup import _release_caches
     from ..operators.hypotests import dec_double_wide
 
     d38 = "decimal(38,0)"
@@ -3962,7 +3921,7 @@ def distance_correlation_daily(
         F.when(ok, F.round(dcor2, 6)).alias("dcor2"),
         F.when(ok, F.round(F.sqrt(dcor2), 6)).alias("dcor"),
     )
-    return _release_caches(result, [daily2])
+    return lifecycle.finish(result, [daily2])
 
 
 def watson_u2_minute(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -3991,7 +3950,6 @@ def watson_u2_minute(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     discipline). Pre-epoch timestamps take the positive
     residue ((µs % 86.4e9)+86.4e9) % 86.4e9. Output one row:
     (n, u2_stat)."""
-    from .dedup import _release_caches
     from ..operators.hypotests import dec_double_wide
 
     d19 = "decimal(19,0)"
@@ -4066,7 +4024,7 @@ def watson_u2_minute(df: DataFrame, ts_col: str = "ts") -> DataFrame:
         F.col("n0").cast("long").alias("n"),
         F.when(F.col("n0") > 0, F.round(u2, 6)).alias("u2_stat"),
     )
-    return _release_caches(result, [vc])
+    return lifecycle.finish(result, [vc])
 
 
 def epps_pulley_daily(
@@ -4090,7 +4048,6 @@ def epps_pulley_daily(
     folds are exact decimal sums with ONE closing sequence. Zero
     variance or empty input → NULL stat (1-row guarantee).
     Output: (n_days, tep_stat)."""
-    from .dedup import _release_caches
     from ..operators.hypotests import dec_double_wide
 
     d38 = "decimal(38,0)"
@@ -4157,4 +4114,4 @@ def epps_pulley_daily(
         nn.cast("long").alias("n_days"),
         F.when(ok, F.round(tep, 6)).alias("tep_stat"),
     )
-    return _release_caches(result, [daily])
+    return lifecycle.finish(result, [daily])

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
+
 # Word tokens: ASCII alnum/underscore runs. `\\w` differs between regex
 # dialects (unicode classes); the explicit class does not.
 TOKEN_RE = "[A-Za-z0-9_]+"
@@ -363,13 +365,12 @@ def fingerprint(
     The persisted (md5, shingles) projection is corpus-scale; with
     ``release=True`` (library default) the result is checkpointed
     eagerly and the cache dropped before returning — same contract as
-    the near-dup pipelines (dedup._release_caches). Contract/bench
+    the near-dup pipelines (``lifecycle.finish``). Contract/bench
     wrappers pass ``release=False``: a one-shot session consumes the
     result and exits, and the checkpoint write does not belong in the
     timed path (the r2 lesson).
     """
     from ..functions.partitioning import ensure_parallelism
-    from .dedup import _release_caches
 
     base = ensure_parallelism(df.select("doc_id", text_col)).select(
         "doc_id",
@@ -389,9 +390,7 @@ def fingerprint(
             "content_md5",
         )
     )
-    if release:
-        return _release_caches(result, [base])
-    return result
+    return lifecycle.finish(result, [base], release)
 
 
 def feature_hash_counts(
@@ -584,12 +583,7 @@ def bigram_lm_scores(
         )
         .withColumn("ppl", F.round(F.exp(-F.col("avg_logprob")), 3))
     )
-    if release:
-        from .dedup import _release_caches
-
-        return _release_caches(result, [bigram_counts])
-    result._bigram_cache = bigram_counts  # caller-managed release
-    return result
+    return lifecycle.finish(result, [bigram_counts], release)
 
 
 def perplexity_buckets(
@@ -639,11 +633,10 @@ def perplexity_buckets(
         )
     )
     if not release:
-        # Propagate the caller-managed cache handle: the r5 form left
-        # it stranded on the intermediate `scores` frame, which these
-        # transformations drop — making the bigram-count persist
-        # reclaimable only via session-wide clearCache (ADVICE r5).
-        result._bigram_cache = scores._bigram_cache  # type: ignore[attr-defined]
+        # Propagate the handover: these transformations drop it from the
+        # intermediate `scores` frame, which would leave the bigram-count
+        # persist reclaimable only via session-wide clearCache.
+        result._caches = scores._caches  # type: ignore[attr-defined]
     return result
 
 
@@ -1038,11 +1031,7 @@ def keyness_llr_top_terms(
     result = scored.withColumn(
         "rank", F.row_number().over(w).cast("long")
     ).filter(F.col("rank") <= k)
-    if not release:
-        return result
-    from .dedup import _release_caches
-
-    return _release_caches(result, [st])
+    return lifecycle.finish(result, [st], release)
 
 
 def source_char_ngram_cosine(
@@ -1138,9 +1127,7 @@ def source_char_ngram_cosine(
             ).alias("cosine"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [gc, norms])
+    return lifecycle.finish(result, [gc, norms])
 
 
 def pii_density_by_source(
@@ -1870,9 +1857,7 @@ def burrows_delta(
             ).alias("burrows_delta"),
         )
     )
-    from .dedup import _release_caches
-
-    return _release_caches(result, [tf])
+    return lifecycle.finish(result, [tf])
 
 
 def log_odds_dirichlet(
@@ -1964,9 +1949,7 @@ def log_odds_dirichlet(
         )
     )
     result = top_a.unionByName(top_b)
-    from .dedup import _release_caches
-
-    return _release_caches(result, [tf])
+    return lifecycle.finish(result, [tf])
 
 
 def token_fertility_by_lang(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -94,16 +94,6 @@ class MetricsRegistry:
         return True
 
 
-def observe_counts(df: DataFrame, name: str) -> DataFrame:
-    """Attach row/metric observation to a frame; metrics materialize with
-    whatever action runs the frame (pull via QueryExecutionListener or
-    ``Observation`` object in callers that need the values)."""
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("rows"),
-    )
-
-
 def observed(df: DataFrame, observation) -> DataFrame:
     """Attach a live ``pyspark.sql.Observation`` carrying the reference's
     record counter (ref: U/metrics.py:44-49 records_processed_total).

@@ -45,18 +45,6 @@ BRONZE_SCHEMA = T.StructType(
 )
 
 
-def quarantine_schema(base: T.StructType) -> T.StructType:
-    """Quarantine = input schema + reason/timestamp strings
-    (ref: T/bronze_to_silver.py:182-183)."""
-    return T.StructType(
-        base.fields
-        + [
-            T.StructField("quarantine_reason", T.StringType(), True),
-            T.StructField("quarantine_timestamp", T.StringType(), True),
-        ]
-    )
-
-
 # Multimodal asset column convention (driver extension mandate): opaque
 # binary payload + typed metadata struct. Decode happens in Pandas UDFs;
 # the schema keeps Catalyst able to prune/push down around the blob.

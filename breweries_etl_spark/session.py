@@ -45,6 +45,12 @@ def get_spark(
         # Broadcast small dimension tables aggressively (region/nation/
         # supplier-class dims stay far under this at any SF we run).
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # Persisted relations keep their output partitioning, so a
+        # consumer keyed like the cached repartition skips its Exchange
+        # (the bucketed prefix-count relation in operators/hypotests.py).
+        # The Spark 4.1 default, pinned so a default change cannot
+        # silently add shuffles.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

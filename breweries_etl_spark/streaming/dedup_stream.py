@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import lifecycle
 from ..operators.dedup import prefix_jaccard_incremental
 
 
@@ -97,6 +98,8 @@ def neardup_admission_batch(
             "overwrite"
         ).parquet(pairs_dir)
         matches.unpersist()
+        # and the two shingle caches handed over on ``matches._caches``
+        lifecycle.unpersist(matches)
 
 
 def streaming_neardup_admission(

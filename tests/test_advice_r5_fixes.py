@@ -3,9 +3,9 @@
 1. streaming._batch_cents rounds HALF-UP per value (matching the
    oracle's CAST AS DECIMAL(12,2) in DuckDB), not pandas half-to-even
    — exercised on an exact-in-binary half-cent tie (0.125).
-2. heavy_keys / salted_join expose the per-key-count persist as a
-   ``_heavy_cache`` handle on the returned frame so long-lived callers
-   can unpersist deterministically.
+2. heavy_keys / salted_join hand the per-key-count persist over on the
+   returned frame's ``_caches`` so long-lived callers can unpersist
+   deterministically.
 3. perplexity_buckets(release=False) propagates the bigram-count cache
    handle to the FINAL frame (the r5 form stranded it on the dropped
    intermediate).
@@ -48,12 +48,13 @@ def test_salted_join_propagates_heavy_cache(spark):
     )
     dim = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k2 long, v string")
     heavy = heavy_keys(fact, "k")
-    assert heavy._heavy_cache.storageLevel.useMemory
-    heavy._heavy_cache.unpersist()
+    (heavy_cache,) = heavy._caches
+    assert heavy_cache.storageLevel.useMemory
+    heavy_cache.unpersist()
 
     joined = salted_join(fact, dim, "k", "k2", salt_on="row")
     assert joined.count() == 102
-    cache = joined._heavy_cache
+    (cache,) = joined._caches
     assert cache.storageLevel.useMemory
     cache.unpersist()
     assert not cache.storageLevel.useMemory
@@ -68,7 +69,7 @@ def test_perplexity_buckets_propagates_bigram_cache(spark):
     )
     out = perplexity_buckets(docs, release=False)
     assert out.count() == 6
-    cache = out._bigram_cache
+    (cache,) = out._caches
     assert cache.storageLevel.useMemory
     cache.unpersist()
     assert not cache.storageLevel.useMemory

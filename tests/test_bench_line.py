@@ -40,3 +40,35 @@ def test_final_line_small_set_includes_everything(tmp_path, monkeypatch):
     line = bench.final_line(timings, 0.7, 0.01)
     parsed = json.loads(line)
     assert parsed["queries"] == timings
+
+
+def test_hung_child_records_no_timings(tmp_path, monkeypatch, capsys):
+    """A child that hits its timeout is killed and counted like one that
+    printed nothing — the other families and the final line survive."""
+    import subprocess
+
+    monkeypatch.setattr(
+        bench.os.path, "dirname", lambda p, _orig=os.path.dirname: str(tmp_path)
+    )
+    monkeypatch.setattr(bench, "FAMILIES", {"hung": ["q_hung"], "ok": ["q_ok"]})
+
+    def fake_run(cmd, **kwargs):
+        args = cmd[2:]
+        if args[0] == "--solo" or args[1] == "hung":
+            raise subprocess.TimeoutExpired(cmd, kwargs["timeout"])
+        out = (
+            'BENCH_FAMILY {"q_ok": 0.25}\n'
+            'BENCH_SAMPLES {"q_ok": [0.25, 0.3, 0.2]}\n'
+        )
+        return subprocess.CompletedProcess(cmd, 0, stdout=out, stderr="")
+
+    monkeypatch.setattr(bench.subprocess, "run", fake_run)
+    assert bench._solo_subprocess("q_hung", 1) is None
+    bench.main()
+    parsed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert parsed["queries"] == {"q_ok": 0.25}
+    assert parsed["n_queries"] == 1
+    full = json.load(open(tmp_path / "BENCH_SELF.json"))
+    assert full["noise_canary"] == {
+        "query": bench.CANARY_QUERY, "start_sec": None, "end_sec": None
+    }

@@ -100,6 +100,7 @@ def test_prefix_counts_null_predicate_lands_in_group_b(spark):
     )
     pc = grouped_value_prefix_counts(df, "v", F.col("lang") == "en")
     rows = {float(r["v"]): (r["ca"], r["cb"]) for r in pc.collect()}
-    pc._vc_cache.unpersist()  # type: ignore[attr-defined]
-    pc._vb_cache.unpersist()  # type: ignore[attr-defined]
+    vc_cache, vb_cache = pc._caches  # type: ignore[attr-defined]
+    vc_cache.unpersist()
+    vb_cache.unpersist()
     assert rows == {5.0: (1, 1), 7.0: (0, 2)}, rows

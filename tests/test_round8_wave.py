@@ -570,7 +570,7 @@ def test_ranking_stability_reversed_is_minus_one(spark):
 
 def test_dunn_release_false_hands_caches_to_caller(spark):
     """ADVICE r10 (low): with release=False the persisted internals
-    must be handed over on result._dunn_caches so the caller can free
+    must be handed over on result._caches so the caller can free
     them — previously per_g leaked for the session lifetime. r13: the
     prefix-count primitive now persists the bucketed relation too, so
     the handover carries THREE caches (value-counts, bucketed, per_g)."""
@@ -582,7 +582,7 @@ def test_dunn_release_false_hands_caches_to_caller(spark):
         "g string, v double",
     )
     res = dunn_pairwise_z(df, "g", "v", release=False)
-    caches = getattr(res, "_dunn_caches", None)
+    caches = getattr(res, "_caches", None)
     assert caches is not None and len(caches) == 3
     assert all(c.storageLevel.useMemory for c in caches)
     res.collect()

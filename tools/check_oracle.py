@@ -14,6 +14,13 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...] [--json OUT]
 the committed evidence file (ORACLE_SELFCHECK_r{N}.json) that covers the
 queries the driver's 50-per-round sample doesn't reach.
 
+Leak sweep: after each query is collected, the CacheManager entries and
+persistent RDDs it left behind are counted into the entry's ``leak``
+({"cache_entries": C, "persistent_rdds": P}) and then released, so
+every query starts from an empty cache. A non-zero count
+is expected only where the query's wrapper passes ``release=False``
+(the caller-owned handover); the summary carries the totals.
+
 ``--sample N --seed R`` draws a deterministic random subset of N
 registry names using ``random.Random(R).sample`` over the sorted name
 list (round-8 verdict #4: a fresh NON-self-selected sample each round,
@@ -62,6 +69,24 @@ def normalize(rows, cols):
         out.append(tuple(vals))
     out.sort()
     return [cols[i] for i in order], out
+
+
+def sweep_leaks(spark) -> dict:
+    """Count what the last query left cached, then release it all: the
+    DataFrame caches via the CacheManager, then any RDD still persisted
+    outside it (localCheckpoint blocks)."""
+    jsc = spark.sparkContext._jsc
+    left = {
+        "cache_entries": spark._jsparkSession.sharedState()
+        .cacheManager()
+        .numCachedEntries(),
+        "persistent_rdds": jsc.getPersistentRDDs().size(),
+    }
+    spark.catalog.clearCache()
+    rdds = jsc.getPersistentRDDs()
+    for k in rdds.keySet().toArray():
+        rdds.get(k).unpersist()
+    return left
 
 
 def main() -> int:
@@ -132,6 +157,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    leaks: dict[str, dict] = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -144,6 +170,10 @@ def main() -> int:
             results[name] = {"status": "fail", "rows": None, "err": f"spark: {exc}"[:300]}
             print(f"FAIL {name}: spark error {exc}")
             continue
+        finally:
+            leaks[name] = sweep_leaks(spark)
+            if any(leaks[name].values()):
+                print(f"LEAK {name}: {leaks[name]}")
         if name not in oracles:
             results[name] = {"status": "rows_only", "rows": len(s_rows), "err": None}
             print(f"ROWS-ONLY {name}: {len(s_rows)} rows")
@@ -201,11 +231,21 @@ def main() -> int:
         if sn != dn:
             failures.append(name)
             diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
+            results[name] = {"status": "fail", "rows": len(s_rows), "err": "values"}
             print(f"FAIL {name}: value mismatch, first diffs: {diff}")
             continue
         results[name] = {"status": "ok", "rows": len(s_rows), "err": None}
         print(f"OK   {name}: {len(s_rows)} rows")
 
+    for name, r in results.items():
+        r["leak"] = leaks[name]
+    leaky = {n: v for n, v in leaks.items() if any(v.values())}
+    print(
+        f"leak sweep: {len(leaky)} of {len(leaks)} queries left caches "
+        f"({sum(v['cache_entries'] for v in leaks.values())} CacheManager "
+        f"entries, {sum(v['persistent_rdds'] for v in leaks.values())} "
+        f"persistent RDDs)"
+    )
     if json_out:
         summary = {
             "sample_n": sample_n,
@@ -216,6 +256,11 @@ def main() -> int:
             "n_ok": sum(1 for r in results.values() if r["status"] == "ok"),
             "n_rows_only": sum(1 for r in results.values() if r["status"] == "rows_only"),
             "n_fail": len(failures),
+            "leak_queries": sorted(leaky),
+            "leak_cache_entries": sum(v["cache_entries"] for v in leaks.values()),
+            "leak_persistent_rdds": sum(
+                v["persistent_rdds"] for v in leaks.values()
+            ),
             "queries": results,
         }
         with open(json_out, "w") as f:
