@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from breweries_etl_spark.config import KEY_FIELDS
+from breweries_etl_spark.functions import lifecycle
 from breweries_etl_spark.functions.exact import (
     sql_disc_price,
     sql_charge,
@@ -242,7 +243,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import json
     import os
-    import tempfile
 
     from breweries_etl_spark.config import MedallionPaths
     from breweries_etl_spark.plans.pipeline import run_pipeline
@@ -261,8 +261,10 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         for r in nations
     ]
-    # mkdtemp: concurrent drivers must not collide on a shared path
-    root = tempfile.mkdtemp(prefix="medallion_e2e_")
+    # a fresh root per call: concurrent drivers must not collide on a
+    # shared path; the returned gold frame reads it lazily, so it lives
+    # until the process exits
+    root = lifecycle.temp_root("medallion_e2e_")
     paths = MedallionPaths(root)
     prepare_landing_directory(paths.landing)
     with open(os.path.join(paths.landing, "page1.json"), "w", encoding="utf-8") as f:
@@ -415,7 +417,6 @@ def q_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     offline fixture mode (pages derived deterministically from nation)."""
     import json
     import os
-    import tempfile
 
     from breweries_etl_spark.sources.brewery_datasource import BreweryDataSource
 
@@ -430,9 +431,7 @@ def q_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in nations
     ]
     pages = [records[:20], records[20:]]
-    fixture = os.path.join(
-        tempfile.mkdtemp(prefix="brewery_fixture_"), "pages.json"
-    )
+    fixture = os.path.join(lifecycle.temp_root("brewery_fixture_"), "pages.json")
     with open(fixture, "w", encoding="utf-8") as f:
         json.dump(pages, f)
 
@@ -939,7 +938,6 @@ def q_streaming_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     for ANY batch split, so the streaming sink itself is oracle-checked
     (argmax window in DuckDB), not just its batch twin."""
     import os
-    import tempfile
 
     from breweries_etl_spark.streaming.merge_sink import (
         read_latest_snapshot,
@@ -947,7 +945,7 @@ def q_streaming_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="spark_merge_sink_")
+    work = lifecycle.temp_root("spark_merge_sink_")
     src = os.path.join(work, "src")
     tbl = os.path.join(work, "table")
     projected = events.select(
@@ -3829,7 +3827,6 @@ def q_streaming_gold_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact sums make the final snapshot independent of the batch split,
     so a plain batch GROUP BY oracles the stream end-to-end."""
     import os
-    import tempfile
 
     from breweries_etl_spark.streaming.merge_sink import (
         read_latest_snapshot,
@@ -3837,7 +3834,7 @@ def q_streaming_gold_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="spark_gold_merge_")
+    work = lifecycle.temp_root("spark_gold_merge_")
     src = os.path.join(work, "src")
     tbl = os.path.join(work, "table")
     projected = events.select("event_type", "value")
@@ -3895,9 +3892,15 @@ def _pin_session(spark: SparkSession) -> None:
     tz-naive oracle; nanos-as-long so the events parquet reads)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Right-size shuffles for the local test SFs (Spark's default 200
-    # over-parallelizes 60k-row inputs ~6×); AQE still coalesces further.
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    # One shuffle partition per core of the session (Spark's default 200
+    # over-parallelizes 60k-row inputs). AQE coalesces transient
+    # shuffles further, but never a persisted relation
+    # (canChangeCachedPlanOutputPartitioning=false): every cache an
+    # operator builds keeps this count and pays that many tasks on each
+    # scan, so a fixed count above the cores is pure scheduling cost.
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 

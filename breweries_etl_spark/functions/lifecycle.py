@@ -16,8 +16,10 @@ truncating checkpoint, then unpersist every cache it read.
   stands for that list — e.g. the filtered view over a persisted
   shingle projection, or a prefix-count frame over its two caches.
 - ``checkpoint(df)`` writes under one directory per SparkContext,
-  created on first use below the first ``SPARK_LOCAL_DIRS`` entry (else
-  the temp default) and removed when the process exits.
+  created on first use by ``temp_root``: below the first
+  ``SPARK_LOCAL_DIRS`` entry (else the temp default), removed when the
+  process exits. Queries that stage files of their own (pipeline roots,
+  merge-sink tables) take their directories from ``temp_root`` too.
 """
 
 from __future__ import annotations
@@ -30,15 +32,21 @@ import tempfile
 from pyspark.sql import DataFrame
 
 
-def _ensure_checkpoint_dir(sc) -> None:
-    if sc.getCheckpointDir() is not None:
-        return
+def temp_root(prefix: str) -> str:
+    """A fresh directory below the first ``SPARK_LOCAL_DIRS`` entry (else
+    the temp default), removed when the process exits — for files a
+    lazy result still reads after the call that wrote them returns."""
     root = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0] or None
     if root is not None:
         os.makedirs(root, exist_ok=True)
-    path = tempfile.mkdtemp(prefix="spark_ckpt_", dir=root)
+    path = tempfile.mkdtemp(prefix=prefix, dir=root)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
-    sc.setCheckpointDir(path)
+    return path
+
+
+def _ensure_checkpoint_dir(sc) -> None:
+    if sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(temp_root("spark_ckpt_"))
 
 
 def checkpoint(df: DataFrame) -> DataFrame:

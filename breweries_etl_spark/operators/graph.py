@@ -92,9 +92,10 @@ from contextlib import contextmanager
 
 
 @contextmanager
-def _loop_shuffle_partitions(spark, n_rows: int):
+def _loop_shuffle_partitions(edges: DataFrame, n_rows: int):
     """Size shuffle partitions to the LOOP's frames, not the session
-    default, for the duration of an iterative-graph loop.
+    default, for the duration of an iterative-graph loop; yields the
+    persisted ``edges`` narrowed to that count.
 
     An iterative loop runs O(rounds × stages) shuffles over frames whose
     size is KNOWN after the first materialization (the edge count). The
@@ -109,16 +110,28 @@ def _loop_shuffle_partitions(spark, n_rows: int):
     still write default-partition shuffle files and the scheduler still
     plans them.
 
+    ``edges`` was persisted (and counted) under the session default, so
+    every relation derived from it by a narrow or broadcast join (e.g.
+    PageRank's ``wedges``) would keep the session's partition count and
+    scan that many tasks every round. The yielded frame is ``edges``
+    coalesced to the target when it has more partitions — narrow, so no
+    shuffle — carrying ``_caches = [edges]`` so that releasing it
+    releases the persisted relation.
+
     The conf is restored in ``finally``; plans compiled inside the
     context keep their partitioning once materialized (localCheckpoint),
     so results are unaffected — partition counts never change WHICH
     rows meet, only where."""
-    conf = spark.conf
+    conf = edges.sparkSession.conf
     prev = conf.get("spark.sql.shuffle.partitions")
     target = max(4, min(int(prev), -(-n_rows // _LOOP_ROWS_PER_PARTITION)))
     conf.set("spark.sql.shuffle.partitions", str(target))
     try:
-        yield
+        if edges._jdf.rdd().getNumPartitions() > target:
+            narrowed = edges.coalesce(target)
+            narrowed._caches = [edges]  # type: ignore[attr-defined]
+            edges = narrowed
+        yield edges
     finally:
         conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -132,13 +145,12 @@ def connected_components(
     """(doc_id, cluster_id) for every node in ``pairs``, where cluster_id
     is the minimum node id in the component — deterministic on any
     partitioning."""
-    spark = pairs.sparkSession
-    sc = spark.sparkContext
+    sc = pairs.sparkSession.sparkContext
     rdds_before = _persistent_rdd_ids(sc)
     edges, n_edges = _materialized(
         _undirected(pairs, src_col, dst_col)
     )
-    with _loop_shuffle_partitions(spark, n_edges):
+    with _loop_shuffle_partitions(edges, n_edges) as edges:
         return _cc_loop(sc, rdds_before, edges, max_iterations)
 
 
@@ -239,8 +251,7 @@ def bfs_levels(
     caller's, so the seed aggregate was a SECOND full fact scan
     (the dunn_pairwise class of bug; judge r10 open item #2).
     """
-    spark = pairs.sparkSession
-    sc = spark.sparkContext
+    sc = pairs.sparkSession.sparkContext
     rdds_before = _persistent_rdd_ids(sc)
     # Persisted because every hop re-joins the full edge list.
     edges, n_edges = _materialized(
@@ -248,7 +259,7 @@ def bfs_levels(
     )
     if callable(sources):
         sources = sources(edges)
-    with _loop_shuffle_partitions(spark, n_edges):
+    with _loop_shuffle_partitions(edges, n_edges) as edges:
         return _bfs_loop(sc, rdds_before, edges, sources, max_hops)
 
 
@@ -457,13 +468,12 @@ def pagerank(
     cross-engine hashing meaningless); pytest verifies against a dense
     numpy power iteration at 1e-9 and the Σrank=1 invariant.
     """
-    spark = pairs.sparkSession
-    sc = spark.sparkContext
+    sc = pairs.sparkSession.sparkContext
     rdds_before = _persistent_rdd_ids(sc)
     edges, n_edges = _materialized(
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
     )
-    with _loop_shuffle_partitions(spark, n_edges):
+    with _loop_shuffle_partitions(edges, n_edges) as edges:
         return _pagerank_loop(sc, rdds_before, edges, iterations, damping)
 
 
@@ -473,12 +483,20 @@ def _pagerank_loop(
     # One aggregation pass yields the node table, each node's out-degree,
     # AND the dangling set (out_deg = 0) — r4's first cut ran three
     # separate jobs (nodes distinct, out_deg groupBy, dangling anti-join)
-    # for facts one union+groupBy already knows.
+    # for facts one groupBy already knows. Both endpoint rows come from
+    # one scan of ``edges`` (as in ``_undirected``): a union would scan
+    # it twice, in a map stage of twice the loop's partition count.
     nodes_deg, n = _materialized(
-        edges.select(F.col("src").alias("node"), F.lit(1).alias("has_out"))
-        .union(edges.select(F.col("dst").alias("node"), F.lit(0).alias("has_out")))
-        .groupBy("node")
-        .agg(F.sum("has_out").alias("out_deg"))
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("src").alias("node"), F.lit(1).alias("has_out")),
+                    F.struct(F.col("dst").alias("node"), F.lit(0).alias("has_out")),
+                )
+            ).alias("__n")
+        )
+        .groupBy("__n.node")
+        .agg(F.sum("__n.has_out").alias("out_deg"))
     )
     nodes = nodes_deg.select("node")
     if n == 0:

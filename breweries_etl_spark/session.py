@@ -3,7 +3,9 @@
 One place to encode the scale posture: AQE (runtime re-planning, skew-join
 splitting, partition coalescing), UTC session timezone (oracle parity with
 DuckDB), Arrow for any pandas exchange, and shuffle partitions sized to the
-environment rather than Spark's default 200.
+environment rather than Spark's default 200: ``local[N]`` with N from
+``SPARK_GRAFT_CPUS``, else the host's CPU count, and one shuffle partition
+per core unless the caller asks otherwise.
 
 On a real cluster the same builder applies — only master/memory change; the
 SQL-level configs here are cluster-safe defaults.
@@ -21,7 +23,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
 

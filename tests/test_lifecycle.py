@@ -96,6 +96,40 @@ def test_checkpoint_dir_removed_when_owning_process_exits(tmp_path):
     assert not os.path.exists(ckpt_root)
 
 
+def test_registry_temp_roots_removed_when_owning_process_exits(tmp_path, sf_dir):
+    """pipeline_e2e stages a medallion root per call; its lazily-read gold
+    frame needs the root until the process ends, and nothing after."""
+    local = tmp_path / "local"
+    probe = (
+        "import glob, os, sys\n"
+        "import __spark_entry__ as e\n"
+        "from breweries_etl_spark.session import get_spark\n"
+        "spark = get_spark('temp_root_probe', shuffle_partitions=1)\n"
+        "q = e.queries()['pipeline_e2e']\n"
+        "for _ in range(2):\n"
+        "    assert q(spark, sys.argv[1]).count() > 0\n"
+        "roots = glob.glob(os.path.join(os.environ['SPARK_LOCAL_DIRS'], 'medallion_e2e_*'))\n"
+        "assert len(roots) == 2, roots\n"
+    )
+    env = dict(
+        os.environ,
+        PYTHONPATH=REPO,
+        SPARK_LOCAL_DIRS=str(local),
+        SPARK_GRAFT_CPUS="1",
+        SPARK_GRAFT_DRIVER_MEM="512m",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe, sf_dir],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert not list(local.glob("medallion_e2e_*"))
+
+
 @pytest.mark.parametrize("name", ["ngram_jaccard_pairs", "containment_pairs"])
 def test_set_group_pairs_release_false_hand_over_caches(spark, name):
     from breweries_etl_spark.operators import dedup
